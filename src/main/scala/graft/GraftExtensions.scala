@@ -17,6 +17,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * analysis, so the functions resolve in plain SQL, views, and thrift-server
   * sessions alike.
   *
+  * Injected planner strategies:
+  *  - [[graft.plans.GraftTopKStrategy]] — grouped top-k for the opt-in
+  *    `rn_native` row_number pattern
+  *  - [[graft.plans.GraftRangeFrameSumStrategy]] — exact `sum` over
+  *    `RANGE BETWEEN <literal> PRECEDING AND CURRENT ROW` in one O(n) pass
+  *  - [[graft.plans.GraftAsOfStrategy]] — the as-of join node built by
+  *    [[graft.plans.GraftOps.asofJoin]]
+  *
   * Injected functions:
   *  - `cosine_sim(array<double>, array<double>)` — codegen'd cosine
   *    similarity ([[graft.functions.CosineSim]])
@@ -35,6 +43,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // sort-based Window plan for the opt-in `rn_native` pattern (see
     // graft.plans.GraftTopKStrategy — fires only on that alias name).
     ext.injectPlannerStrategy(_ => graft.plans.GraftTopKStrategy)
+    // Sliding RANGE-frame sums (decimal, or integral in LEGACY mode) in one
+    // O(n) two-pointer pass instead of WindowExec's per-row re-aggregation;
+    // any other Window plans as before. See graft.plans.GraftRangeFrameSumStrategy.
+    ext.injectPlannerStrategy(_ => graft.plans.GraftRangeFrameSumStrategy)
     // Optimizer rule (conf-gated, default off): auto-rewrites the canonical
     // Filter(row_number ≤ k)-over-Window pattern into the rn_native shape the
     // strategy above plans — see graft.plans.GraftTopKMarkRule.

@@ -40,8 +40,12 @@ class NoForkLocalFileSystem
 
 class NoForkRawLocalFileSystem extends RawLocalFileSystem {
 
+  /** The nine rwx bits through java.nio. A mode with a sticky, setuid or
+    * setgid bit (07000), which `PosixFilePermission` cannot express, goes to
+    * `RawLocalFileSystem.setPermission` so the bit is not dropped. */
   override def setPermission(p: Path, permission: FsPermission): Unit = {
     val m: Int = permission.toShort.toInt
+    if ((m & 0xE00) != 0) return super.setPermission(p, permission) // octal 07000
     val perms = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
     import PosixFilePermission._
     val bits = Seq(OWNER_READ, OWNER_WRITE, OWNER_EXECUTE,

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -115,15 +117,23 @@ object Tables {
     * memoized value IS the recomputation's result (the same (size, mtime)
     * staleness contract as readCached / the chunkedSource staging). An
     * input without resolvable files (in-memory test frames) skips the memo
-    * and computes directly. */
+    * and computes directly.
+    *
+    * Staleness contract: an entry is reused while every input file keeps
+    * its path, byte length and modification time. A rewrite that keeps all
+    * three (same length within the filesystem's mtime resolution, or a copy
+    * that preserves mtime) is NOT detected; a writer that rewrites a source
+    * must change its file set (new part names, as Spark's writers do). A
+    * non-fatal error while listing or stat-ing the files skips or weakens
+    * the memo; fatal errors (OOM, interrupts) propagate. */
   private val fpMemo = boundedLru[String](256)
   private[graft] def memoFingerprint(df: DataFrame, tag: String)(
       compute: => String): String = {
-    val files = try df.inputFiles.sorted.toSeq catch { case _: Throwable => Seq.empty }
+    val files = try df.inputFiles.sorted.toSeq catch { case NonFatal(_) => Seq.empty }
     if (files.isEmpty) return compute
     val meta = files.map { u =>
       val p = try new java.io.File(new java.net.URI(u)) catch {
-        case _: Throwable => new java.io.File(u)
+        case NonFatal(_) => new java.io.File(u)
       }
       s"$u=${p.length()}:${p.lastModified()}"
     }.mkString(",")

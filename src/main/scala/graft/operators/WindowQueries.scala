@@ -174,8 +174,8 @@ object WindowQueries extends QueryModule {
         .orderBy("day")
     }),
 
-    // E6: value-range frame — sum of events within 10.0 trailing value units.
-    // Range frames with fractional bounds need the SQL form in Spark.
+    // E6: value-range frame, summed in one O(n) pass by graft.plans.GraftRangeFrameSumExec —
+    // sum of values within 10.0 trailing value units; fractional bounds need the SQL form.
     "e6_win_range_frame" -> ((s, dir) => {
       val t = Tables(s, dir)
       t.events

@@ -716,6 +716,31 @@ class PlanSpec extends AnyFunSuite {
     assert(foPlan.contains("SortMergeJoin") || foPlan.contains("ShuffledHashJoin"), foPlan)
   }
 
+  test("e6: the RANGE-frame sum runs on GraftRangeFrameSumExec with the stock exchanges") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    def nodes(df: org.apache.spark.sql.DataFrame): (Int, Int, Int) = {
+      df.collect() // runs the DataFrame's own plan, so AQE's final plan is read
+      val p = df.queryExecution.executedPlan
+      (Aqe.collect(p) { case w: WindowExec => w }.size,
+        Aqe.collect(p) { case r: graft.plans.GraftRangeFrameSumExec => r }.size,
+        Aqe.collect(p) { case e: ShuffleExchangeLike => e }.size)
+    }
+    // 2 exchanges, as with WindowExec: hash(event_type) for the frame,
+    // range(event_id) for the ORDER BY
+    assert(nodes(SparkEntry.queries("e6_win_range_frame")(spark, sfDir)) == ((0, 1, 2)))
+    // a ROWS frame and a floating-point RANGE sum stay on WindowExec
+    val (e4Windows, e4Native, _) = nodes(SparkEntry.queries("e4_win_running_sum")(spark, sfDir))
+    assert((e4Windows, e4Native) == ((1, 0)))
+    val dbl = Tables(spark, sfDir).events.selectExpr("event_id",
+      "sum(value) OVER (PARTITION BY event_type ORDER BY value " +
+        "RANGE BETWEEN 10.0 PRECEDING AND CURRENT ROW) AS s")
+    val (dblWindows, dblNative, _) = nodes(dbl)
+    assert((dblWindows, dblNative) == ((1, 0)))
+  }
+
   test("merge cardinality guard: the source window rides the join's own shuffle") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
